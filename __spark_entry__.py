@@ -96,7 +96,7 @@ from pac_data_pipeline_spark.plans.pipelines import (
     snowflake_batch_pipeline,
     train_corpus_pipeline,
 )
-from pac_data_pipeline_spark.session import tune_session
+from pac_data_pipeline_spark.session import ensure_parallelism, tune_session
 from pac_data_pipeline_spark.sinks.documents import (
     keyed_json_tree,
     nested_path_records,
@@ -1056,8 +1056,8 @@ def q_x_cosine_topk_axis(spark, sf_dir):
     """Multi-probe LSH ANN with axis-aligned sign buckets — the
     SQL-expressible member of the hyperplane family: buckets,
     1-bit-flip probes, sequential-fold cosines, and ranks are all
-    reproduced bit-for-bit by the oracle. The random-plane variant
-    (x_cosine_topk_lsh) stays the production path."""
+    reproduced bit-for-bit by the oracle. The full-plane variant
+    (x_cosine_topk_lsh) has the better-conditioned buckets."""
     emb = _t(spark, sf_dir, "embeddings")
     return cosine_topk_lsh(
         emb,
@@ -1149,10 +1149,7 @@ def q_x_theta_setops(spark, sf_dir):
     gram space overlap split B's" WITHOUT a full cross-set join —
     the mergeable-sketch path for cross-corpus contamination
     estimates at 100 TB. See operators/stats.theta_sketch_setops."""
-    from pac_data_pipeline_spark.ext.dedup_text import (
-        _with_token_ngrams,
-        ensure_parallelism,
-    )
+    from pac_data_pipeline_spark.ext.dedup_text import _with_token_ngrams
     from pac_data_pipeline_spark.operators.stats import (
         theta_sketch_setops,
     )
@@ -1173,7 +1170,8 @@ def q_x_embedding_near_dup_axis(spark, sf_dir):
     SQL-expressible member of the hyperplane family, carrying the
     hash-exact differential evidence for the bucketed-self-join
     plan (buckets AND sequential-fold cosines reproduced by the
-    oracle); the random-plane variant stays the production path."""
+    oracle); the full-plane variant (x_embedding_near_dup) has the
+    better-conditioned buckets."""
     from pac_data_pipeline_spark.ext.similarity import (
         embedding_near_dup_pairs_axis,
     )
@@ -1360,8 +1358,8 @@ def q_x_tfidf_terms(spark, sf_dir):
 
 def q_x_dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERING: pairwise candidates → connected
-    components → keeper label per doc (iterative min-label
-    propagation; exact recursive-CTE oracle)."""
+    components → keeper label per doc (large-star/small-star
+    contraction; exact recursive-CTE oracle)."""
     return near_dup_clusters(_t(spark, sf_dir, "documents"), threshold=0.4)
 
 
@@ -1376,18 +1374,14 @@ def q_x_cosine_topk(spark, sf_dir):
 
 def q_x_cosine_topk_lsh(spark, sf_dir):
     """LSH-bucketed approximate cosine top-10 through the FULL
-    random-hyperplane multi-probe path — HASH-EXACT since round 7
-    via the md5-derived Rademacher plane matrix
-    (portable_hyperplanes, the x_embedding_near_dup pattern): the
-    DuckDB oracle re-derives all 12 planes from md5 in SQL,
-    reproduces every 64-term signature fold, the 1-bit probe set,
-    the bucket join, and the in-bucket cosine ranking bit-for-bit.
-    x_cosine_topk_axis keeps the degenerate axis-plane evidence;
-    Gaussian planes stay the production default."""
+    hyperplane multi-probe path — hash-exact via the md5-derived
+    Rademacher plane matrix (portable_hyperplanes): the DuckDB
+    oracle re-derives all 12 planes from md5 in SQL, reproduces
+    every 64-term signature fold, the 1-bit probe set, the bucket
+    join, and the in-bucket cosine ranking bit-for-bit.
+    x_cosine_topk_axis keeps the degenerate axis-plane evidence."""
     emb = _t(spark, sf_dir, "embeddings")
-    return cosine_topk_lsh(
-        emb, queries_from_corpus(emb, n=5), k=10, portable=True
-    )
+    return cosine_topk_lsh(emb, queries_from_corpus(emb, n=5), k=10)
 
 
 def q_x_cosine_topk_ivf(spark, sf_dir):
@@ -1418,22 +1412,16 @@ def q_x_session_window(spark, sf_dir):
 
 
 def q_x_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs via random-hyperplane
-    sign-LSH buckets — HASH-EXACT since round 7: the md5-derived
-    Rademacher plane matrix (portable_hyperplanes) replaces the
-    driver-RNG Gaussian planes in the registry query, so the DuckDB
-    oracle re-derives the SAME planes from md5 in SQL and reproduces
-    buckets AND sequential-fold cosines bit-for-bit (the simhash
-    portable-vs-production pattern; Gaussian planes remain the
-    production default and stay unit-tested). Unlike
+    """Embedding-cosine near-dup pairs via hyperplane sign-LSH
+    buckets — hash-exact: the plane matrix is the md5-derived
+    Rademacher one (portable_hyperplanes), so the DuckDB oracle
+    re-derives the SAME planes from md5 in SQL and reproduces
+    buckets AND sequential-fold cosines bit-for-bit. Unlike
     x_embedding_near_dup_axis (whose bucket is the sign pattern of
     the first k coordinates), this exercises the FULL hyperplane
     machinery: a 64-term signed fold per plane per vector."""
     return embedding_near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"),
-        threshold=0.3,
-        n_planes=8,
-        portable=True,
+        _t(spark, sf_dir, "embeddings"), threshold=0.3, n_planes=8
     )
 
 
@@ -1494,7 +1482,6 @@ def q_x_multimodal_features(spark, sf_dir):
     comparator canonicalizes via pandas sort_values, which crashes
     on ndarray cells — CORRECTNESS_r06's one failure was exactly
     this query returning the raw array)."""
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
     from pac_data_pipeline_spark.ext.multimodal import (
         mixed_media_from_documents,
     )
@@ -1524,8 +1511,6 @@ def q_x_png_decode_dims(spark, sf_dir):
     any header, deflate, or unfilter bug breaks the hash. (Pixel
     statistics stay in rows-only x_multimodal_features; the same
     decode path feeds both.)"""
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
-
     # compute-bound encode+decode: fan out over the one-row-group scan
     media = png_media_from_documents(
         ensure_parallelism(_t(spark, sf_dir, "documents"))
@@ -1554,7 +1539,6 @@ def q_x_webp_decode_dims(spark, sf_dir):
     prefix-code, or transform bug breaks the hash. Same shape as
     x_png_decode_dims; pixel statistics stay in rows-only
     x_multimodal_features."""
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
     from pac_data_pipeline_spark.ext.multimodal import (
         webp_media_from_documents,
     )
@@ -1604,7 +1588,6 @@ def q_x_suffix_dups(spark, sf_dir):
     and the single-machine formulation. All-integer output, and the
     oracle replays the identical sort/window/LCP in SQL."""
     from pac_data_pipeline_spark.ext.corpus import suffix_duplication
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
 
     # char-position explode is compute-heavy: fan out over the
     # one-row-group scan before the window shuffle
@@ -1636,7 +1619,6 @@ def q_x_mjpeg_frames(spark, sf_dir):
     a broken decoder, or a lying header all hash-mismatch. JPEG
     encode is compute-bound Python: fan out first (one-row-group
     testdata quirk)."""
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
     from pac_data_pipeline_spark.ext.multimodal import (
         mjpeg_video_media_from_documents,
     )
@@ -2715,19 +2697,16 @@ def q_x_entity_resolution(spark, sf_dir):
     cluster id + size + keeper flag per customer. The all-pairs
     product never materializes; clustering uses large-star/small-star
     contraction — the name graph is DENSE (single-digit-substitution
-    cliques), where star's aggressive per-round contraction beats
-    min-label propagation ~2x (both verified equal against the
-    recursive-CTE oracle)."""
-    from pac_data_pipeline_spark.ext.dedup_text import (
-        connected_components_star,
-    )
+    cliques), where star's aggressive per-round contraction pays off
+    (verified against the recursive-CTE oracle)."""
+    from pac_data_pipeline_spark.ext.dedup_text import connected_components
 
     c = _t(spark, sf_dir, "customer")
     edges = fuzzy_join_banded(
         c, c, text_col="c_name", id_col="c_custkey",
         band_len=16, max_distance=1,
     ).select("id_a", "id_b")
-    comp = connected_components_star(
+    comp = connected_components(
         c.select("c_custkey"), edges, id_col="c_custkey"
     )
     sizes = comp.groupBy("component_id").agg(
@@ -4756,11 +4735,8 @@ def q_x_cc_largestar(spark, sf_dir):
     """Near-dup clustering via large-star/small-star connected
     components — the O(log n)-round algorithm for deep component
     graphs, hash-checked against the SAME recursive-CTE oracle as
-    the min-label variant (x_dedup_clusters): two interchangeable
-    physical strategies, one verified semantics."""
-    return near_dup_clusters(
-        _t(spark, sf_dir, "documents"), threshold=0.4, algorithm="star"
-    )
+    x_dedup_clusters."""
+    return near_dup_clusters(_t(spark, sf_dir, "documents"), threshold=0.4)
 
 
 def q_x_jaccard_join(spark, sf_dir):
@@ -5112,7 +5088,6 @@ def q_x_video_near_dup(spark, sf_dir):
     every frame hash from the formulas (dims 4+d%5 × 4+3d%5,
     2+d%4 frames) and brute-forces the pairs. The only corpus
     shuffle is the (band, value) equi-join."""
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
     from pac_data_pipeline_spark.ext.multimodal import (
         video_frame_dhash,
         video_media_from_documents,
@@ -7117,7 +7092,7 @@ def oracle_sql() -> dict[str, str]:
     """
     # exact transitive closure over the deterministic candidate
     # graph: DuckDB's recursive CTE IS the oracle for the iterative
-    # min-label propagation.
+    # large-star/small-star contraction.
     oracles["x_dedup_clusters"] = """
         WITH RECURSIVE
         g AS (
@@ -7853,7 +7828,7 @@ def oracle_sql() -> dict[str, str]:
                    AS chars_per_token
         FROM d GROUP BY lang
     """
-    # x_cdc_chunks: the poly-tier boundary contract (ext/corpus.py
+    # x_cdc_chunks: the boundary contract (ext/corpus.py
     # CDC_POLY_* constants) — fold (acc*257 + codepoint) % (2^31-1)
     # over the 8-char window, boundary when h % 16 = 0. unicode()
     # mirrors Spark/numpy code points exactly (probed incl. astral);

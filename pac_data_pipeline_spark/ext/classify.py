@@ -174,25 +174,6 @@ def nb_train(
     )
 
 
-def nb_predict(
-    df: DataFrame,
-    token_counts: DataFrame,
-    label_stats: DataFrame,
-    label_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Score every document of ``df`` against a pre-trained model:
-    one output row per document — (id, predicted label, rounded
-    score, token count). Documents with no tokens fall back to the
-    prior-plus-normalizer score (argmax of the prior)."""
-    dtl = _doc_token_counts(df, id_col, text_col, [])
-    return _predict_from_counts(
-        df.select(id_col), dtl, token_counts, label_stats,
-        label_col, id_col,
-    )
-
-
 def nb_classify(
     df: DataFrame,
     label_col: str = "lang",

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pac_data_pipeline_spark.ext.text import TOKEN_SEP
+from pac_data_pipeline_spark.session import ensure_parallelism
 
 
 def chunk_dedup(
@@ -350,9 +351,8 @@ def suffix_duplication(
     )
 
 
-#: polynomial window-hash constants shared by the Spark ``poly``
-#: tier and the DuckDB oracle (the shared-constant contract used by
-#: every portable tier): base 257 > any single UTF-8 byte spread,
+#: polynomial window-hash constants shared by :func:`cdc_chunks`
+#: and the DuckDB oracle: base 257 > any single UTF-8 byte spread,
 #: modulus 2^31 − 1 keeps every intermediate (< 2^39 + 2^21) exact
 #: in int64 on numpy, the JVM, and DuckDB alike; the 1/16 mask
 #: gives ~16 + window/2 char mean chunks.
@@ -366,7 +366,6 @@ def cdc_chunks(
     text_col: str = "text",
     id_col: str = "doc_id",
     window: int = 8,
-    hash: str = "poly",
 ) -> DataFrame:
     """Content-defined chunking (the FastCDC/rsync idea): chunk
     boundaries are positions whose local content hash hits a target
@@ -375,108 +374,42 @@ def cdc_chunks(
     that makes chunk-level storage dedup survive edits.
 
     Boundary contract: a boundary sits before position p (1-based,
-    p > 1, windows must fit) when the hash of the ``window`` chars
-    starting at p hits a 1/16 mask. Three hash tiers:
-
-    * ``poly`` (default, THE ORACLE TIER): polynomial window hash
-      over unicode code points, ``fold(c: acc·257 + c mod 2^31−1)``,
-      boundary when ``h % 16 == 0``. Exact integer arithmetic that
-      any engine reproduces bit-for-bit (the DuckDB oracle mirrors
-      it with a list comprehension + list_reduce), evaluated as a
-      numpy sliding-window batch inside ONE Arrow ``mapInPandas`` —
-      measured 0.7 s at sf0.1 vs 7.4 s for per-position JVM md5 and
-      41 s for the same fold as interpreted HOF lambdas (per-element
-      lambda dispatch, not arithmetic, is the cost). This is the
-      documented exception to "stay JVM-side": the op is compute-
-      bound per row with zero shuffle, exactly the Arrow-batch
-      profile (same judgment as the multimodal codecs).
-    * ``md5``: boundary when the lowercase-hex md5 of the window
-      ends in '0'. JVM-only path (no Python workers), bit-identical
-      everywhere, ~10× the poly tier's cost — kept for environments
-      that cannot run Arrow workers.
-    * ``xxhash64``: boundary when ``pmod(xxhash64(window), 16) == 0``
-      — the fastest pure-JVM tier, engine-specific hash (rows-only
-      comparable, the minhash production-tier trade).
-
-    Short texts (< window + 1 chars) form a single chunk. One output
-    row per (doc, chunk): ordinal, chunk text, md5 fingerprint.
-    Downstream dedup (:func:`cdc_dup_profile`) adds the one
-    fingerprint shuffle. All tiers fan out to cluster parallelism
-    first — the one-row-group testdata quirk would otherwise run the
-    whole corpus on a single task (first bench: 162 s single-task vs
-    ~6 s fanned out at sf0.1); at production scale the scan already
-    has ≥ cores splits and the fan-out is a no-op.
-    """
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
-
-    if hash not in ("poly", "md5", "xxhash64"):
-        raise ValueError(
-            f"hash must be 'poly', 'md5', or 'xxhash64', got {hash!r}"
-        )
-    t = F.col(text_col)
-    n = F.length(t)
-    df = ensure_parallelism(df.filter(t.isNotNull() & (n > 0)))
-    if hash == "poly":
-        return _cdc_chunks_poly(df, text_col, id_col, window)
-    # candidate boundary positions: 2 .. len-window+1 (a boundary at
-    # 1 would make an empty first chunk; windows must fit)
-    pos = F.when(
-        n >= window + 1,
-        F.sequence(F.lit(2), n - F.lit(window - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    if hash == "md5":
-        bexpr = (
-            lambda p: F.md5(t.substr(p, F.lit(window))).substr(
-                F.lit(32), F.lit(1)
-            )
-            == "0"
-        )
-    else:
-        bexpr = (
-            lambda p: F.pmod(
-                F.xxhash64(t.substr(p, F.lit(window))), F.lit(CDC_MASK)
-            )
-            == 0
-        )
-    bounds = F.filter(pos, bexpr)
-    starts = F.concat(F.array(F.lit(1)), bounds)
-    ends = F.concat(bounds, F.array(n + 1))
-    chunks = F.transform(
-        F.sequence(F.lit(1), F.size(starts)),
-        lambda i: t.substr(
-            F.element_at(starts, i),
-            F.element_at(ends, i) - F.element_at(starts, i),
-        ),
-    )
-    return df.select(
-        id_col,
-        F.posexplode(chunks).alias("chunk_ord", "chunk"),
-    ).select(
-        id_col,
-        "chunk_ord",
-        "chunk",
-        F.md5(F.col("chunk")).alias("chunk_hash"),
-    )
-
-
-def _cdc_chunks_poly(
-    df: DataFrame, text_col: str, id_col: str, window: int
-) -> DataFrame:
-    """The ``poly`` tier of :func:`cdc_chunks`: one Arrow batch pass,
-    numpy sliding-window polynomial hash, chunk split in Python.
+    p > 1, windows must fit) when the polynomial hash of the
+    ``window`` code points starting at p,
+    ``fold(c: acc·257 + c mod 2^31−1)``, satisfies ``h % 16 == 0``.
+    Exact integer arithmetic that any engine reproduces bit-for-bit
+    (the DuckDB oracle mirrors it with a list comprehension +
+    list_reduce), evaluated as a numpy sliding-window batch inside
+    ONE Arrow ``mapInPandas`` — measured 0.7 s at sf0.1 vs 7.4 s for
+    per-position JVM md5 and 41 s for the same fold as interpreted
+    HOF lambdas (per-element lambda dispatch, not arithmetic, is the
+    cost). This is the documented exception to "stay JVM-side": the
+    op is compute-bound per row with zero shuffle, exactly the
+    Arrow-batch profile (same judgment as the multimodal codecs).
     UTF-32 decode gives the code-point array directly, matching
     Spark's/DuckDB's code-point-based substring semantics (probed:
-    both return identical code points for BMP and astral chars)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+    both return identical code points for BMP and astral chars).
 
+    Short texts (< window + 1 chars) form a single chunk; NULL and
+    empty texts produce no rows. One output row per (doc, chunk):
+    ordinal, chunk text, md5 fingerprint. Downstream dedup
+    (:func:`cdc_dup_profile`) adds the one fingerprint shuffle. The
+    input fans out to cluster parallelism first — the one-row-group
+    testdata quirk would otherwise run the whole corpus on a single
+    task (first bench: 162 s single-task vs ~6 s fanned out at
+    sf0.1); at production scale the scan already has ≥ cores splits
+    and the fan-out is a no-op.
+    """
+    import numpy as np
+
+    t = F.col(text_col)
+    df = ensure_parallelism(df.filter(t.isNotNull() & (F.length(t) > 0)))
     id_field = df.schema[id_col]
-    schema = StructType(
+    schema = T.StructType(
         [
-            StructField(id_field.name, id_field.dataType),
-            StructField("chunk_ord", IntegerType()),
-            StructField("chunk", StringType()),
+            T.StructField(id_field.name, id_field.dataType),
+            T.StructField("chunk_ord", T.IntegerType()),
+            T.StructField("chunk", T.StringType()),
         ]
     )
     base, mod, mask = CDC_POLY_BASE, CDC_POLY_MOD, CDC_MASK

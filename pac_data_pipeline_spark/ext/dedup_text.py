@@ -23,18 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pac_data_pipeline_spark.ext.text import TOKEN_SEP, TOKEN_SEP_SQL
-
-
-def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the cluster's parallelism when
-    the scan produced fewer splits than cores — shingle/hash stages
-    are compute-bound, and a 3-split file would idle 29 of 32 local
-    cores. No-op (and no shuffle) when splits already ≥ cores, which
-    is the normal state at production scale."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from pac_data_pipeline_spark.session import ensure_parallelism
 
 
 def pin_join_parallelism(df: DataFrame, *keys: str) -> DataFrame:
@@ -197,29 +186,6 @@ def minhash_signature(
         f" i -> coalesce(__m[CAST(i AS BIGINT)], __gmin))"
     )
     return assembled.select(F.col(id_col), sig.alias("minhash"))
-
-
-def minhash_signature_multiseed(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """Classic n-seeded-hash MinHash — kept as the reference
-    implementation for tests; O(n·|shingles|) compute per doc, zero
-    shuffle. Prefer :func:`minhash_signature` (OPH) in pipelines."""
-    sh = char_shingles(text_col, shingle_k)
-    df = df.select(F.col(id_col), sh.alias("__sh"))
-    sig = F.array(
-        *[
-            F.array_min(
-                F.expr(f"transform(__sh, s -> xxhash64(s, {seed}))")
-            )
-            for seed in range(num_hashes)
-        ]
-    )
-    return df.select(F.col(id_col), sig.alias("minhash"))
 
 
 def lsh_candidate_pairs(
@@ -435,165 +401,27 @@ def connected_components(
 ) -> DataFrame:
     """Connected components over an undirected edge set — the step
     that turns pairwise near-dup candidates into dedup GROUPS (keep
-    one doc per component).
+    one doc per component). Output ``(id_col, component_id)`` with
+    component_id = the smallest member id; nodes without an edge are
+    their own component.
 
-    Min-label propagation WITH pointer-jumping: every node starts
-    labeled with its own id; each round (1) pushes labels across
-    edges and keeps the minimum, then (2) SHORTCUTS through the
-    fresh mapping — label'(x) = min(label(x), label(label(x))) —
-    so the distance a label travels roughly triples per round
-    instead of growing by one. Fixpoint (components labeled by
-    their smallest member) is unchanged; only the rounds to reach
-    it drop from O(diameter) to O(log diameter). The --patho
-    clone's 80-deep duplicate chain (an empty-text flood where
-    every adjacent pair is an exact dup) needed this: plain
-    propagation refused at 25 rounds, shortcutted converges in ~7.
-    Each round is one edge join + one aggregation + one label
-    self-join (all shuffling on the node id, partitioning reused);
-    `localCheckpoint` truncates the growing lineage — without it
-    the plan doubles every round.
-
-    The iteration runs ONLY over nodes incident to an edge: an
-    isolated node's label can never change, so the per-round shuffle
-    is |edge-subgraph| rows, not |corpus|. For near-dup graphs the
-    subgraph is a vanishing fraction of the corpus — at 100 TB this
-    is the difference between iterating over terabytes and
-    iterating over the duplicates."""
-    # localCheckpoint, NOT persist: the returned frame is lazy and
-    # its `singletons` branch anti-joins `touched` (derived from
-    # sym) — a persist unpersisted before that consumption point
-    # re-derived the ENTIRE edge pipeline (full n-gram Jaccard over
-    # the corpus when called from near_dup_clusters) cold at
-    # consumption time. The checkpoint materializes the symmetric
-    # edge set once, truncates the upstream lineage for every
-    # consumer, and is reclaimed by the ContextCleaner when the
-    # result frame drops (no CacheManager leak across calls).
-    sym = (
-        edges.selectExpr("id_a AS src", "id_b AS dst")
-        .union(edges.selectExpr("id_b AS src", "id_a AS dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    # label init must be the id itself (the fixpoint is "min id in
-    # component"); a silent failed cast of a non-numeric id would
-    # propagate null labels as a wrong-but-plausible result, so it
-    # raises JVM-side instead (no extra pass over the data).
-    label = F.col(id_col).cast("long")
-    all_labels = nodes.select(
-        F.col(id_col).alias("id"),
-        F.when(
-            F.col(id_col).isNotNull() & label.isNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit("connected_components: id column is not integral: "),
-                    F.col(id_col).cast("string"),
-                )
-            ).cast("long"),
-        )
-        .otherwise(label)
-        .alias("label"),
-    )
-    # touched is consumed by BOTH the label init join and the
-    # singletons anti-join in the returned lazy frame — checkpoint
-    # so the distinct over sym runs once, not per consumer.
-    touched = sym.select(F.col("src").alias("id")).distinct().localCheckpoint()
-    labels = all_labels.join(touched, "id").localCheckpoint()
-    singletons = all_labels.join(touched, "id", "left_anti")
-    if labels.isEmpty():
-        # no edges at all — the common case for an already-clean
-        # corpus; skip the iteration's per-round job overhead
-        # (labels is checkpointed, so the probe is metadata-cheap)
-        return singletons.select(
-            F.col("id").alias(id_col), F.col("label").alias("component_id")
-        )
-    for _ in range(max_iter):
-        msgs = (
-            sym.join(labels, sym.src == labels.id)
-            .select(F.col("dst").alias("id"), "label")
-        )
-        # prop is consumed twice below (as itself and as the hop
-        # side of the pointer-jumping self-join) — checkpoint so the
-        # union+groupBy (which embeds the msgs edge join) runs once
-        # per round instead of being inlined into both join sides.
-        prop = (
-            labels.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
-        )
-        # pointer-jumping shortcut: compose through the propagated
-        # map. A label is always the id of some touched node (it
-        # started as one and min() preserves membership), so the
-        # lookup hits; the left join + coalesce is belt-and-braces.
-        hop = prop.select(
-            F.col("id").alias("__pid"), F.col("label").alias("__plabel")
-        )
-        new_labels = (
-            prop.join(hop, prop.label == hop.__pid, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("__plabel"), F.col("label")),
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # an unconverged label set is wrong-but-plausible output
-        # (labels = "min id within max_iter hops", not per
-        # component) — refuse rather than return it. Deep graphs
-        # belong on connected_components_star (O(log n) rounds).
-        raise RuntimeError(
-            f"connected_components: no fixpoint in {max_iter} rounds "
-            "— component diameter exceeds max_iter; use "
-            "connected_components_star for deep/chained graphs"
-        )
-    return labels.unionByName(singletons).select(
-        F.col("id").alias(id_col), F.col("label").alias("component_id")
-    )
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond")
-    — the logarithmic-round alternative to min-label propagation
-    (:func:`connected_components`), for graphs whose diameter is NOT
-    shallow (long chains, big merged crawl clusters).
-
-    Each round rewires edges toward component minima:
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond"); each round rewires edges
+    toward component minima:
 
     * large-star: per node u, attach every strictly-larger neighbor
       to m = min(N(u) ∪ {u});
     * small-star: orient edges large→small, then attach each node's
       smaller-or-equal neighborhood (and itself) to its minimum.
 
-    Both steps are one groupBy(min) + one join keyed on the SAME
-    node column, so the shuffle partitioning is reused within a
-    round, and the edge set shrinks monotonically toward a star per
+    Each phase is one groupBy(collect_set) keyed on the node column,
+    and the edge set shrinks monotonically toward a star per
     component (root = component minimum). Convergence needs
-    O(log n) rounds vs O(diameter) for label propagation — on a
-    1000-chain it is ~10 rounds instead of 1000. Per-round state is
+    O(log n) rounds where min-label propagation needs O(diameter) —
+    on a 1000-chain ~10 rounds instead of 1000. Per-round state is
     the edge list only (never node labels for the whole corpus), so
-    isolated nodes cost nothing until the final union.
-
-    Output schema matches :func:`connected_components`:
-    ``(id_col, component_id)`` with component_id = min member id —
-    the two algorithms are interchangeable and equality-tested.
+    isolated nodes cost nothing until the final union: for near-dup
+    graphs the iteration runs over the duplicates, not the corpus.
     """
     cur = (
         edges.selectExpr("id_a AS u", "id_b AS v")
@@ -674,7 +502,7 @@ def connected_components_star(
             break
     else:
         raise RuntimeError(
-            f"connected_components_star: no fixpoint in {max_iter} "
+            f"connected_components: no fixpoint in {max_iter} "
             "rounds — raise max_iter (rounds needed ≈ log2 of the "
             "largest component)"
         )
@@ -698,39 +526,19 @@ def near_dup_clusters(
     threshold: float = 0.4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    algorithm: str = "label",
 ) -> DataFrame:
     """Dedup clustering on a deterministic candidate graph:
     consecutive-id pairs with exact n-gram Jaccard ≥ threshold form
     the edges (LSH would propose the pairs at scale; consecutive
     pairs keep the oracle exact), then connected components label
-    each doc with its keeper (= min id in the component).
-
-    ``algorithm``: ``label`` = min-label propagation (O(diameter)
-    rounds, right for shallow near-dup clusters); ``star`` =
-    large-star/small-star (O(log n) rounds, right for deep/chained
-    components). Identical output, exercised against the same
-    recursive-CTE oracle."""
-    if algorithm not in ("label", "star"):
-        # a silent fallback would run the O(diameter) propagation on
-        # a typo ('Star', 'largestar', ...) — and on a deep graph
-        # that now RAISES on non-convergence instead of taking the
-        # intended star path
-        raise ValueError(
-            f"algorithm must be 'label' or 'star', got {algorithm!r}"
-        )
+    each doc with its keeper (= min id in the component)."""
     a = df.select(F.col(id_col).alias("id_a"))
     b = df.select(F.col(id_col).alias("id_b"))
     pairs = a.join(b, F.col("id_b") == F.col("id_a") + 1)
     edges = ngram_jaccard_pairs(df, pairs, text_col, id_col).filter(
         F.col("jaccard") >= threshold
     )
-    cc = (
-        connected_components_star
-        if algorithm == "star"
-        else connected_components
-    )
-    return cc(df, edges.select("id_a", "id_b"), id_col)
+    return connected_components(df, edges.select("id_a", "id_b"), id_col)
 
 
 # -- n-gram Jaccard ----------------------------------------------------------

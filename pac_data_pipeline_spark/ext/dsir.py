@@ -46,11 +46,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pac_data_pipeline_spark.ext.dedup_text import (
-    ensure_parallelism,
-    portable_hash60,
-)
+from pac_data_pipeline_spark.ext.dedup_text import portable_hash60
 from pac_data_pipeline_spark.ext.text import TOKEN_SEP_SQL
+from pac_data_pipeline_spark.session import ensure_parallelism
 
 MICRO = 1_000_000
 

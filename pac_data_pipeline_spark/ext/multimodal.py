@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pac_data_pipeline_spark.session import ensure_parallelism
+
 #: What a codec raises on a payload it cannot decode. The codecs'
 #: documented contract is ValueError, but fuzzing shows truncated /
 #: bit-flipped payloads can surface as struct.error (short unpack),
@@ -1357,7 +1359,6 @@ def image_dhash(media: DataFrame) -> DataFrame:
     the shared codec dispatch; undecodable payloads report
     decoded=false with a NULL hash. Fans out first (compute-bound;
     one-row-group inputs would otherwise serialize)."""
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1437,7 +1438,6 @@ def video_frame_dhash(media: DataFrame, every_n: int = 2) -> DataFrame:
     One output row per sampled frame; non-AVI payloads skip.
     Arrow-batched; fans out first (decode is compute-bound)."""
     from pac_data_pipeline_spark.ext.avi import decode_avi_frame, parse_avi
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

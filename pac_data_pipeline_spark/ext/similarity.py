@@ -4,9 +4,10 @@ Two tiers:
 * :func:`cosine_topk_bruteforce` — exact top-k, broadcast the query
   set against the corpus; per-row dot products via higher-order
   array functions (JVM, codegen). Exact and oracle-checkable.
-* :func:`cosine_topk_lsh` — the scale path: random-hyperplane LSH
-  buckets shrink the candidate set so the corpus×queries product
-  never materializes; same scoring inside buckets.
+* :func:`cosine_topk_lsh` — the scale path: sign-LSH buckets over
+  md5-derived ±1 hyperplanes (:func:`portable_hyperplanes`) shrink
+  the candidate set so the corpus×queries product never
+  materializes; same scoring inside buckets.
 
 At 100 TB the brute-force variant is only sane with a small query
 set (it's corpus×|Q| work but zero shuffles — scan-side compute,
@@ -110,27 +111,20 @@ def queries_from_corpus(
 # -- LSH-bucketed ANN --------------------------------------------------------
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic Gaussian hyperplanes for sign-LSH."""
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
-
-
 def portable_hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
-    """Rademacher (±1) hyperplanes derived from md5 — the PORTABLE
-    member of the hyperplane family. Coefficient (p, i) is +1 when
-    the first hex digit of ``md5("plane:{p}:{i}")`` is < 8, else −1:
-    any engine with md5 re-derives the exact matrix, which is what
-    lets the x_embedding_near_dup registry query carry a hash-exact
-    DuckDB oracle (the simhash portable-vs-production pattern —
-    Gaussian planes from the driver RNG stay the production
-    default). Sign-LSH only uses the DIRECTION of each plane, so
-    Rademacher vs Gaussian planes give the same collision-probability
-    guarantee (Charikar 2002 needs spherically symmetric planes for
-    the exact cos⁻¹ formula; ±1 planes are the standard cheap
-    approximation and the bucket join is identical). The matrix is
-    inlined as array literals and folded at plan time — zero per-row
-    hash cost, unlike deriving md5 per element per row."""
+    """Rademacher (±1) hyperplanes derived from md5 — the one plane
+    family behind sign-LSH and the JL projection. Coefficient (p, i)
+    is +1 when the first hex digit of ``md5("plane:{p}:{i}")`` is
+    < 8, else −1: any engine with md5 re-derives the exact matrix,
+    which is what lets the LSH and JL registry queries carry
+    hash-exact DuckDB oracles. Sign-LSH only uses the DIRECTION of
+    each plane, so Rademacher planes give the same collision-
+    probability guarantee as Gaussian ones (Charikar 2002 needs
+    spherically symmetric planes for the exact cos⁻¹ formula; ±1
+    planes are the standard cheap approximation and the bucket join
+    is identical). The matrix is inlined as array literals and
+    folded at plan time — zero per-row hash cost, unlike deriving
+    md5 per element per row."""
     import hashlib
 
     return [
@@ -170,7 +164,6 @@ def jl_project(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = True,
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection of an embedding
     column to ``out_dim`` dimensions — the standard pre-ANN
@@ -179,16 +172,13 @@ def jl_project(
     distance distortion, and Achlioptas 2003 shows ±1 Rademacher
     entries give the same guarantee as Gaussians).
 
-    ``portable=True`` (default) derives the ±1 matrix from md5
-    (:func:`portable_hyperplanes` — coefficient (p, i) from the
-    first hex digit of ``md5("plane:{p}:{i}")``), so any engine
-    with md5 re-derives the exact matrix; projections are
+    The ±1 matrix is :func:`portable_hyperplanes` (coefficient
+    (p, i) from the first hex digit of ``md5("plane:{p}:{i}")``),
+    so any engine with md5 re-derives it; projections are
     sequential folds over the zipped arrays (deterministic
     summation order — an oracle replays them bit-for-bit with an
     ordered list_reduce, no round-before-compare slack needed
-    beyond the emitted round(6)). ``portable=False`` swaps in
-    Gaussian planes from the driver RNG (production default
-    elsewhere in this family). Scale factor is the JL-standard
+    beyond the emitted round(6)). Scale factor is the JL-standard
     1/√out_dim, applied AFTER the fold on both engines.
 
     Scale shape: pure scan-stage column expressions — the matrix
@@ -198,11 +188,7 @@ def jl_project(
     without array plumbing."""
     import math
 
-    planes = (
-        portable_hyperplanes(dim, out_dim)
-        if portable
-        else random_hyperplanes(dim, out_dim)
-    )
+    planes = portable_hyperplanes(dim, out_dim)
     scale = 1.0 / math.sqrt(out_dim)
     dots = []
     for plane in planes:
@@ -444,9 +430,7 @@ def cosine_topk_lsh(
     dim: int = 64,
     n_planes: int = 12,
     n_probe_bits: int = 1,
-    seed: int = 42,
     axis_portable: bool = False,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate cosine top-k: sign-LSH signatures bucket the
     corpus; each query probes its own bucket plus all buckets within
@@ -457,16 +441,13 @@ def cosine_topk_lsh(
     Scale shape: corpus signatures are scan-side; the bucket join is
     an equi-join on a long key (shuffle ∝ corpus, not corpus×|Q|).
 
-    ``axis_portable=True`` swaps the random hyperplanes for
-    axis-aligned ones (plane i = axis i): the signature becomes a
-    pure SQL expression, so an external engine reproduces buckets,
-    probes, cosines, and ranks — the hash-exact evidence tier for
-    this plan shape. ``portable=True`` keeps FULL hyperplanes but
-    derives them from md5 (:func:`portable_hyperplanes`) — the
-    external engine re-derives the matrix and reproduces the
-    64-term signature folds too, hash-exact through the complete
-    multi-probe path. Random Gaussian planes stay the production
-    default (better-conditioned buckets)."""
+    The hyperplanes are :func:`portable_hyperplanes`: an external
+    engine re-derives the matrix from md5 and reproduces the
+    ``dim``-term signature folds, buckets, probes, cosines, and
+    ranks — hash-exact through the complete multi-probe path.
+    ``axis_portable=True`` swaps them for axis-aligned planes
+    (plane i = axis i), making the signature a plain per-coordinate
+    sign test."""
     if axis_portable:
 
         def signature(col: str):
@@ -479,11 +460,7 @@ def cosine_topk_lsh(
             return bits.cast("long")
 
     else:
-        planes = (
-            portable_hyperplanes(dim, n_planes)
-            if portable
-            else random_hyperplanes(dim, n_planes, seed)
-        )
+        planes = portable_hyperplanes(dim, n_planes)
 
         def signature(col: str):
             return _sign_signature(col, planes)
@@ -685,8 +662,7 @@ def cosine_topk_ivf_grid(
     dim: int | None = None,
 ) -> DataFrame:
     """IVF top-k with the FIXED-POINT distributed quantizer — the
-    hash-exact evidence tier for the IVF plan shape, the way
-    ``portable=True`` is for the hyperplane family: the coarse
+    hash-exact evidence tier for the IVF plan shape: the coarse
     quantizer is ext/kmeans' integer-grid Lloyd (deterministic
     min-id init, exact BIGINT distances, integer-ratio centroid
     rounding — every assignment reproducible by an external SQL
@@ -1351,21 +1327,13 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     dim: int = 64,
     n_planes: int = 12,
-    seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
-    """Embedding-cosine near-dup: bucket by sign-LSH, compare within
-    buckets only (id_a < id_b), keep pairs above ``threshold``.
-    ``portable=True`` swaps the Gaussian planes for the md5-derived
-    Rademacher matrix (:func:`portable_hyperplanes`) so an external
-    engine reproduces buckets AND cosines bit-for-bit; every other
-    line — signature fold, bucketed self-join, sequential-fold
-    cosine — is shared with the production path."""
-    planes = (
-        portable_hyperplanes(dim, n_planes)
-        if portable
-        else random_hyperplanes(dim, n_planes, seed)
-    )
+    """Embedding-cosine near-dup: bucket by sign-LSH over the
+    md5-derived Rademacher planes (:func:`portable_hyperplanes`),
+    compare within buckets only (id_a < id_b), keep pairs above
+    ``threshold``. An external engine reproduces buckets AND
+    cosines bit-for-bit."""
+    planes = portable_hyperplanes(dim, n_planes)
     sigs = drop_null_vectors(embeddings, vec_col).select(
         F.col(id_col),
         F.col(vec_col).alias("v"),
@@ -1397,16 +1365,10 @@ def embedding_near_dup_pairs_axis(
 ) -> DataFrame:
     """Embedding near-dup with AXIS-ALIGNED sign-LSH: the bucket is
     the sign pattern of the first ``n_planes`` coordinates — the
-    degenerate member of the random-hyperplane family where plane i
-    is axis i.
-
-    Why it exists alongside :func:`embedding_near_dup_pairs`: the
-    bucket is a pure SQL expression (no driver-generated plane
-    matrix), so an external engine reproduces buckets AND cosines
-    bit-for-bit — this variant carries the hash-exact differential
-    evidence for the bucketed-self-join plan shape, while the
-    random-plane variant keeps the better-conditioned buckets for
-    production (axis signs correlate with coordinate skew)."""
+    degenerate member of the hyperplane family where plane i is
+    axis i. It needs no plane matrix;
+    :func:`embedding_near_dup_pairs` has the better-conditioned
+    buckets (axis signs correlate with coordinate skew)."""
     bits = None
     for i in range(n_planes):
         term = F.when(

@@ -14,6 +14,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pac_data_pipeline_spark.session import ensure_parallelism
+
 #: Minimal per-language stopword seeds for the language-ID heuristic.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a"),
@@ -520,8 +522,6 @@ def char_entropy(
     # O(n² log n) per row — measured as a 20+ minute single task at
     # sf0.1. CollapseProject keeps multi-referenced non-cheap
     # columns materialized, making each stage once-per-row.
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
-
     out = (
         ensure_parallelism(df)
         .withColumn("__cs", F.expr(f"array_sort(split({text_col}, ''))"))
@@ -833,7 +833,7 @@ def pmi_collocations(
     cross-engine ln ULP noise cannot flip the order; ties break on
     the bigram text.
     """
-    toked = ensure_parallelism_text(df).withColumn(
+    toked = ensure_parallelism(df).withColumn(
         "__toks", F.expr(f"split(trim({text_col}), '{TOKEN_SEP_SQL}')")
     )
     bigrams = toked.select(
@@ -895,14 +895,6 @@ def pmi_collocations(
     return scored.orderBy(
         F.col("pmi").desc(), F.col("bigram").asc()
     ).limit(k)
-
-
-def ensure_parallelism_text(df: DataFrame) -> DataFrame:
-    """Local import indirection for the shared repartition helper
-    (avoids a circular import at module load)."""
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
-
-    return ensure_parallelism(df)
 
 
 def bpe_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:

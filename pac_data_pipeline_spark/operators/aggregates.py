@@ -69,16 +69,6 @@ def distinct_values(df: DataFrame, col: str) -> DataFrame:
     return df.select(col).distinct().orderBy(col)
 
 
-def distinct_count(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
-    """A5: ``nunique()``. Exact by default; ``approx=True`` switches
-    to HyperLogLog (`approx_count_distinct`) — the right call at
-    100 TB where exact distinct forces a full shuffle of the key."""
-    agg = (
-        F.approx_count_distinct(col) if approx else F.countDistinct(col)
-    ).alias(f"n_{col}")
-    return df.agg(agg)
-
-
 def global_summary(df: DataFrame, value_col: str) -> DataFrame:
     """A7: global sum + count in one pass."""
     return df.agg(

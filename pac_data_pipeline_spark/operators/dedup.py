@@ -39,13 +39,6 @@ def dedup_keep_first(
     )
 
 
-def dedup_any(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """J2 relaxed: when "which duplicate survives" doesn't matter,
-    ``dropDuplicates`` lets Spark keep an arbitrary row — cheaper
-    (hash-agg, no sort within groups)."""
-    return df.dropDuplicates(list(key_cols))
-
-
 def reconcile_counts(
     incoming: DataFrame, existing: DataFrame, label_in: str = "incoming",
     label_ex: str = "existing"

@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pac_data_pipeline_spark.session import ensure_parallelism
+
 
 def profile_columns(
     df: DataFrame,
@@ -37,8 +39,6 @@ def profile_columns(
     row per partition — flip it for production profiling, keep
     exact for differential testing.
     """
-    from pac_data_pipeline_spark.ext.dedup_text import ensure_parallelism
-
     cols = list(cols) if cols is not None else list(df.columns)
     # the exact multi-distinct Expand multiplies rows by |cols|+1
     # before the partial aggregate — spread a small-split scan over

@@ -150,16 +150,6 @@ def check_in_range(
     ).select(F.lit(name).alias("check_name"), "n_violations")
 
 
-def check_accepted_values(
-    df: DataFrame, col: str, allowed: tuple, name: str
-) -> DataFrame:
-    """Violations = non-null values outside the allowed set."""
-    bad = F.col(col).isNotNull() & ~F.col(col).isin(list(allowed))
-    return df.agg(
-        F.sum(bad.cast("int")).cast("bigint").alias("n_violations")
-    ).select(F.lit(name).alias("check_name"), "n_violations")
-
-
 def check_referential(
     child: DataFrame,
     child_key: str,
@@ -176,13 +166,6 @@ def check_referential(
     )
     return orphans.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_violations")
-    ).select(F.lit(name).alias("check_name"), "n_violations")
-
-
-def check_expression(df: DataFrame, bad: Column, name: str) -> DataFrame:
-    """Generic check: violations = rows where ``bad`` is true."""
-    return df.agg(
-        F.sum(bad.cast("int")).cast("bigint").alias("n_violations")
     ).select(F.lit(name).alias("check_name"), "n_violations")
 
 

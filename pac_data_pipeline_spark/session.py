@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Confs that must be set before the JVM starts.
 STARTUP_CONF = {
@@ -134,3 +134,15 @@ def local_table(spark: SparkSession, rows, schema: str):
     # partitions; these are literal dim tables (dozens of rows), so
     # one JVM task is the right shape — coalesce is shuffle-free.
     return spark.createDataFrame(pd.DataFrame(rows), schema=schema).coalesce(1)
+
+
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition up to the cluster's parallelism when
+    the scan produced fewer splits than cores — shingle/hash stages
+    are compute-bound, and a 3-split file would idle 29 of 32 local
+    cores. No-op (and no shuffle) when splits already ≥ cores, which
+    is the normal state at production scale."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df

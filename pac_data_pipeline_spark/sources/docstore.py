@@ -28,6 +28,11 @@ Input schema for writes and output schema for reads is fixed at
 ``(doc_key string, payload string)`` — payload is the JSON document
 (`F.to_json(F.struct(...))` on the way in, `F.from_json` on the way
 out), keeping the connector schema-agnostic like a real doc store.
+
+Every save mode is a per-key upsert, like a document-store ``set``:
+a written document replaces the stored one with the same key, and
+documents whose keys the frame does not carry stay untouched —
+``overwrite`` does not clear the collection first.
 """
 
 from __future__ import annotations
@@ -106,9 +111,8 @@ class DocStoreReader(DataSourceReader):
 
 
 class DocStoreWriter(DataSourceArrowWriter):
-    def __init__(self, options: dict, overwrite: bool):
+    def __init__(self, options: dict):
         self.path = options["path"]
-        self.overwrite = overwrite
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> WriterCommitMessage:
         """Arrow-batched per-partition write: each task receives its
@@ -147,8 +151,8 @@ class DocStoreDataSource(DataSource):
     def reader(self, schema: StructType) -> DataSourceReader:
         return DocStoreReader(self.options)
 
-    def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
-        return DocStoreWriter(self.options, overwrite)
+    def writer(self, schema: StructType, overwrite: bool) -> DataSourceArrowWriter:
+        return DocStoreWriter(self.options)
 
 
 def register_docstore(spark) -> None:

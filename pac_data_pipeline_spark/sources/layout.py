@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pac_data_pipeline_spark.session import ensure_parallelism
 from pac_data_pipeline_spark.sources.readers import (
     load_events,
     save_bucketed,
@@ -169,9 +170,7 @@ def write_z_ordered(
     # sampling pass over the same plan) on 1-2 cores. At production
     # scale the scan already has thousands of splits and this is a
     # no-op — the check costs one plan conversion, no data movement.
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    df = ensure_parallelism(df)
     # ONE bounded 1-row collect (2·|cols| scalars — the tokenizer
     # argmax class of driver fetch), folded into the Z expression as
     # literals. The pre-r11 form attached the bounds row with

@@ -15,6 +15,8 @@ in-engine SQL goes through Catalyst over registered views.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 #: Canonical table set of the synthetic star schema (TESTDATA.md).
@@ -91,27 +93,40 @@ def scan_jdbc(
     return reader.load()
 
 
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events scan with timestamp normalization.
+def normalized_events(
+    spark: SparkSession, scan: Callable[[], DataFrame]
+) -> DataFrame:
+    """Run ``scan`` (a batch or streaming read of the events parquet)
+    and normalize its ``ts`` column — the one place both event
+    loaders share.
 
     The synthetic ``events`` table has shipped in two layouts:
     TIMESTAMP(NANOS) (arrives as a raw nanosecond long under
-    ``spark.sql.legacy.parquet.nanosAsLong``) and TIMESTAMP(MICROS)
-    with ``isAdjustedToUTC=false`` (arrives as TIMESTAMP_NTZ). Both
-    are normalized to session-local TimestampType here — the session
-    timezone is pinned to UTC (session.py), so the NTZ cast is
-    wall-clock exact — and downstream operators can rely on
-    ``ts.cast("long")`` for epoch-second arithmetic."""
+    ``spark.sql.legacy.parquet.nanosAsLong``, set here before the
+    scan resolves its schema) and TIMESTAMP(MICROS) with
+    ``isAdjustedToUTC=false`` (arrives as TIMESTAMP_NTZ). Both are
+    normalized to session-local TimestampType — the session timezone
+    is pinned to UTC (session.py), so the NTZ cast is wall-clock
+    exact — and downstream operators can rely on ``ts.cast("long")``
+    for epoch-second arithmetic."""
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = scan_parquet(spark, f"{sf_dir}/events.parquet")
+    df = scan()
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_type == "timestamp_ntz":
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events scan with timestamp normalization
+    (:func:`normalized_events`)."""
+    return normalized_events(
+        spark, lambda: scan_parquet(spark, f"{sf_dir}/events.parquet")
+    )
 
 
 def load_tables(

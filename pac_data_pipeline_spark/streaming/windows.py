@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pac_data_pipeline_spark.sources.readers import load_events
+from pac_data_pipeline_spark.sources.readers import normalized_events
 
 #: sf_dir → probed events schema (the layout is fixed per dir; the
 #: probe is an extra driver-side footer read per streaming query
@@ -22,27 +22,24 @@ _EVENTS_SCHEMA_CACHE: dict = {}
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source ``readStream`` over the events parquet with the
     same timestamp normalization as the batch loader
-    (readers.load_events). The file source requires an explicit
-    schema, taken from a static probe scan (cached per directory) so
-    both historical testdata layouts (TIMESTAMP(NANOS)-as-long and
-    TIMESTAMP(MICROS) NTZ) stream identically as TimestampType
-    event time."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = _EVENTS_SCHEMA_CACHE.get(sf_dir)
-    if schema is None:
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _EVENTS_SCHEMA_CACHE[sf_dir] = schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    (readers.normalized_events). The file source requires an
+    explicit schema, taken from a static probe scan (cached per
+    directory) so both historical testdata layouts
+    (TIMESTAMP(NANOS)-as-long and TIMESTAMP(MICROS) NTZ) stream
+    identically as TimestampType event time."""
+
+    def scan() -> DataFrame:
+        schema = _EVENTS_SCHEMA_CACHE.get(sf_dir)
+        if schema is None:
+            schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+            _EVENTS_SCHEMA_CACHE[sf_dir] = schema
+        return (
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+        )
+
+    return normalized_events(spark, scan)
 
 
 def tumbling_window_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -263,8 +260,3 @@ def run_streaming_sliding(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.table(query_name)
-
-
-def load_events_for_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared batch loader (nanos-normalized timestamps)."""
-    return load_events(spark, sf_dir)

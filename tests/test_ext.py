@@ -66,10 +66,9 @@ def test_simhash_near_dups(spark):
 
 def test_portable_hyperplane_near_dup(spark):
     """md5-Rademacher planes: the matrix is deterministic ±1 per
-    the documented formula, and the bucketed near-dup with
-    portable=True finds a planted duplicate while (a) keeping the
-    production Gaussian path intact and (b) matching an independent
-    numpy recomputation of the signatures and cosines."""
+    the documented formula, and the bucketed near-dup finds a
+    planted duplicate while matching an independent numpy
+    recomputation of the signatures and cosines."""
     import hashlib
 
     import numpy as np
@@ -99,7 +98,7 @@ def test_portable_hyperplane_near_dup(spark):
     got = {
         (r.id_a, r.id_b): r.cosine
         for r in embedding_near_dup_pairs(
-            df, threshold=0.9, dim=8, n_planes=4, portable=True
+            df, threshold=0.9, dim=8, n_planes=4
         ).collect()
     }
     assert (0, 1) in got and got[(0, 1)] > 0.999
@@ -579,20 +578,30 @@ def test_connected_components_raises_on_unconverged(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(79)], "id_a long, id_b long"
     )
-    # pointer-jumping reach grows ≤ 3^rounds: 3^2 = 9 << diameter 79,
-    # so max_iter=2 cannot converge — must refuse, never return
-    # partial labels
+    # a 79-edge chain needs ~log2(80) star rounds, so max_iter=2
+    # cannot converge — must refuse, never return partial labels
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(nodes, chain, max_iter=2).collect()
 
 
-def test_cc_star_matches_label_propagation(spark):
+def test_connected_components_hand_computed(spark):
     import random
 
-    from pac_data_pipeline_spark.ext.dedup_text import (
-        connected_components,
-        connected_components_star,
-    )
+    from pac_data_pipeline_spark.ext.dedup_text import connected_components
+
+    def components(n, edges_py):
+        # union-find, each node labeled with its component's min id
+        root = list(range(n))
+
+        def find(x):
+            while root[x] != x:
+                x = root[x]
+            return x
+
+        for a, b in edges_py:
+            ra, rb = find(a), find(b)
+            root[max(ra, rb)] = min(ra, rb)
+        return sorted((i, find(i)) for i in range(n))
 
     rng = random.Random(11)
     n = 120
@@ -614,26 +623,18 @@ def test_cc_star_matches_label_propagation(spark):
     for edges_py in cases:
         nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
         edges = spark.createDataFrame(edges_py, "id_a long, id_b long")
-        ref = sorted(
-            map(tuple, connected_components(nodes, edges, max_iter=80).collect())
-        )
-        got = sorted(
-            map(tuple, connected_components_star(nodes, edges).collect())
-        )
-        assert got == ref
-        assert len(got) == n  # exactly one label per node
+        got = sorted(map(tuple, connected_components(nodes, edges).collect()))
+        assert got == components(n, edges_py)
 
 
 def test_cc_star_empty_edges(spark):
-    from pac_data_pipeline_spark.ext.dedup_text import (
-        connected_components_star,
-    )
+    from pac_data_pipeline_spark.ext.dedup_text import connected_components
 
     nodes = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
     edges = spark.createDataFrame([], "id_a long, id_b long")
     out = {
         r.doc_id: r.component_id
-        for r in connected_components_star(nodes, edges).collect()
+        for r in connected_components(nodes, edges).collect()
     }
     assert out == {i: i for i in range(5)}
 

@@ -175,3 +175,56 @@ def test_nested_path_records_money_signs_and_plain_decimal(spark):
     assert out["brands/b/records/2028/pac"] == (
         '{"democrat":12.34,"republican":-12345678.90}'
     )
+
+
+def test_event_ts_layouts_load_identically_batch_and_stream(spark, tmp_path):
+    """Both on-disk events layouts — TIMESTAMP(NANOS), read as a raw
+    long, and TIMESTAMP(MICROS) with isAdjustedToUTC=false, read as
+    TIMESTAMP_NTZ — load as the same TimestampType instants through
+    the batch loader and the streaming loader."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    from pac_data_pipeline_spark.sources.readers import load_events
+    from pac_data_pipeline_spark.streaming.windows import events_stream
+
+    epoch = dt.datetime(1970, 1, 1)
+    wall = [
+        dt.datetime(2024, 1, 1, 0, 0, 0, 1),
+        dt.datetime(2024, 6, 30, 23, 59, 59, 999999),
+        dt.datetime(1999, 12, 31, 12, 0),
+    ]
+    micros = dt.timedelta(microseconds=1)
+    want = [(i, (w - epoch) // micros) for i, w in enumerate(wall)]
+    got = []
+    for unit in ("ns", "us"):
+        sf_dir = tmp_path / unit
+        sf_dir.mkdir()
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array(range(len(wall)), pa.int64()),
+                    "ts": pa.array(wall, pa.timestamp(unit)),
+                    "value": pa.array([1.0] * len(wall)),
+                }
+            ),
+            str(sf_dir / "events.parquet"),
+            version="2.6",
+        )
+        written = pq.read_schema(sf_dir / "events.parquet").field("ts")
+        assert written.type == pa.timestamp(unit)
+
+        batch = load_events(spark, str(sf_dir))
+        stream = events_stream(spark, str(sf_dir))
+        name = f"t_event_ts_{unit}"
+        stream.writeStream.format("memory").queryName(name).trigger(
+            availableNow=True
+        ).start().awaitTermination()
+        for df in (batch, spark.table(name)):
+            assert isinstance(df.schema["ts"].dataType, TimestampType)
+            rows = df.select("event_id", F.unix_micros("ts")).collect()
+            got.append(sorted(map(tuple, rows)))
+    assert got == [want] * 4
