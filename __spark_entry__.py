@@ -3606,12 +3606,12 @@ def q_pipe_index_align(spark, sf_dir):
 
 def q_x_bpe_train(spark, sf_dir):
     """BPE tokenizer training (8 merges) over the documents corpus:
-    corpus-wide vocab aggregation once, then per-round JVM pair
-    counting + Arrow-batched merge application on the vocab frame.
+    corpus-wide vocab aggregation and ONE collect, then every round
+    (pair counts, argmax, merge rewrite) on the driver's vocab list.
     HASH-EXACT since round 7: the DuckDB oracle unrolls the merge
     loop into MATERIALIZED CTE rounds — identical vocab, identical
     (count DESC, left, right) tie-break, and the doubled-space
-    rewrite reproducing Python's lookaround-bounded re.sub (see
+    rewrite reproducing the lookaround-bounded regex rewrite (see
     ext/text.bpe_train_sql) — so any divergence in any round's pair
     counts or chosen merge breaks the hash. Equality with a
     plain-Python reference trainer stays pinned in
@@ -3678,10 +3678,10 @@ def q_x_unigram_encode(spark, sf_dir):
 def q_x_wordpiece_train(spark, sf_dir):
     """WordPiece tokenizer training (Schuster & Nakajima; the BERT
     lineage) — the THIRD tokenizer family, completing BPE + unigram:
-    the bpe_train loop with the likelihood-ratio argmax
-    cnt(l,r)/(cnt(l)·cnt(r)). HASH-EXACT by construction: the ratio
-    is never a float — the sort key is the exact 128-bit integer
-    quotient cnt·10^18 div (cnt_l·cnt_r) (bounded ≤ 10^18 since
+    the bpe_train loop (one vocab collect, driver-side rounds) with
+    the likelihood-ratio argmax cnt(l,r)/(cnt(l)·cnt(r)). HASH-EXACT
+    by construction: the ratio is never a float — the sort key is
+    the exact integer quotient cnt·10^18 div (cnt_l·cnt_r) (bounded ≤ 10^18 since
     cnt ≤ min(cnt_l, cnt_r)), ties by (left, right); the oracle
     unrolls the rounds with the identical pair/unit counts and
     quotient (ext/wordpiece.py)."""

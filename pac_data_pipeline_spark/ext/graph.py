@@ -66,6 +66,10 @@ def pagerank(
     stream the checkpointed edge side in storage order), so the
     float trajectory is bit-identical to the dense form.
     """
+    if n_iter < 1:
+        # n_iter=0 would leave the rank frame unbound; fail before
+        # any plan is built, as hits() does
+        raise ValueError("n_iter must be >= 1")
     # the edge list feeds every iteration (plus the out-degree agg);
     # without materialization Catalyst INLINES the caller's edge
     # construction into each consumer — the synthetic 5-way-union
@@ -233,6 +237,18 @@ def hits(
         raise ValueError("n_iter must be >= 1")
     edges = edges.localCheckpoint()
     nodes = nodes.select(id_col).localCheckpoint()
+    # an authority sums hub scores over edges FROM nodes, a hub sums
+    # authority scores over edges INTO nodes, in every iteration —
+    # the dense form's joins with node-covering score frames (and
+    # hits_fixture_sql's) did exactly this; the sparse score frames
+    # also carry off-node endpoints, so the edges are restricted
+    # up front instead
+    a_edges = edges.join(
+        nodes.select(F.col(id_col).alias("src")), "src", "left_semi"
+    )
+    h_edges = edges.join(
+        nodes.select(F.col(id_col).alias("dst")), "dst", "left_semi"
+    )
     n_row = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("__n")))
     hub = nodes.crossJoin(n_row).select(
         id_col, F.round(F.lit(1.0) / F.col("__n"), 12).alias("hub")
@@ -240,7 +256,7 @@ def hits(
     auth = None
     for _ in range(n_iter):
         raw_a = (
-            edges.join(
+            a_edges.join(
                 hub.select(
                     F.col(id_col).alias("src"), F.col("hub").alias("__h")
                 ),
@@ -269,7 +285,7 @@ def hits(
             ).alias("auth"),
         )
         raw_h = (
-            edges.join(
+            h_edges.join(
                 auth.select(
                     F.col(id_col).alias("dst"),
                     F.col("auth").alias("__av"),
@@ -647,6 +663,10 @@ def personalized_pagerank(
     the edge list once before the loop (guide §2.4). Per-edge
     values and aggregate consumption order are unchanged, so the
     float trajectory is bit-identical to the dense form."""
+    if n_iter < 1:
+        # n_iter=0 would leave the rank frame unbound; fail before
+        # any plan is built, as hits() does
+        raise ValueError("n_iter must be >= 1")
     edges = edges.localCheckpoint()
     is_seed = (F.col(id_col) % seed_mod == 0).cast("int")
     # seeded (id, flag) feeds the seed count and the final densify

@@ -72,7 +72,16 @@ def mmr_select(
     ``(sel_rank, vid, rel_d, div_d)`` — the pick order, the exact
     grid distance to the corpus-centroid query, and the exact
     min-distance to the previously selected set (NULL for the first
-    pick, which has no predecessors)."""
+    pick, which has no predecessors).
+
+    Eager: the selection runs while the result frame is built — one
+    checkpoint of the candidates plus k ``collect()`` jobs, one per
+    greedy round — and the returned frame holds the k literal rows.
+
+    A NULL vector element makes every distance involving that
+    vector NULL (SQL arithmetic): a NULL ``rel_d`` sorts first, the
+    min-distance fold skips NULL distances, and a round whose every
+    score is NULL picks the smallest id."""
     vecs = (
         embeddings.filter(
             F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
@@ -126,7 +135,10 @@ def mmr_select(
     # exact BIGINTs) are expression-identical, so the pick
     # trajectory is bit-identical to the frame-threaded form.
     def _arr(qv: list) -> str:
-        return "array(" + ",".join(f"{int(v)}L" for v in qv) + ")"
+        return "array(" + ",".join(
+            "CAST(NULL AS BIGINT)" if v is None else f"{int(v)}L"
+            for v in qv
+        ) + ")"
 
     picks: list[tuple] = []
     sel_qs: list[list] = []

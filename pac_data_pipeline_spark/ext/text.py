@@ -897,69 +897,63 @@ def pmi_collocations(
     ).limit(k)
 
 
-def bpe_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """:func:`bpe_train`'s stage 0 — the ONE corpus-touching pass:
-    (word, frequency) vocabulary, symbols space-separated
-    ("h e l l o"), materialized by localCheckpoint so every training
-    round reads the tiny vocab frame instead of re-deriving it."""
+#: Java regex's ``\S``, spelled out for Python's ``re``. Java's
+#: ``\s`` is the ASCII set [ \t\n\x0B\f\r], Python's is Unicode-
+#: aware, and :data:`TOKEN_SEP` does not split on \x0B — so a
+#: symbol may hold a VT, and the merge rewrite must see it as
+#: whitespace exactly as the JVM ``regexp_replace`` did.
+_JAVA_NON_SPACE = r"[^ \t\n\x0b\f\r]"
+
+
+def merge_vocab(df: DataFrame, text_col: str = "text") -> list[list]:
+    """The merge trainers' ONE Spark action: the corpus's
+    (word, frequency) vocabulary as ``[syms, freq]`` lists, symbols
+    space-separated ("h e l l o"). Tokenization and the character
+    split stay in the JVM (``split(w, "(?!$)")``), so the symbols
+    are the ones every oracle reproduces; the merge rounds then run
+    on the driver over this list (|unique words| entries, not
+    corpus-sized)."""
     words = (
         df.select(F.explode(tokens(text_col)).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    return words.select(
-        F.concat_ws(" ", F.split(F.col("w"), "(?!$)")).alias("syms"),
-        "freq",
-    ).localCheckpoint()
+    return [
+        [r[0], r[1]]
+        for r in words.select(
+            F.concat_ws(" ", F.split(F.col("w"), "(?!$)")), "freq"
+        ).collect()
+    ]
 
 
-def bpe_pair_counts(vocab: DataFrame) -> DataFrame:
-    """:func:`bpe_train`'s per-round pair-count aggregate — the plan
-    the merge loop repeats ``n_merges`` times, so its shape is
-    pinned in tests/test_plans.py: adjacent symbol pairs exploded
-    from the checkpointed vocab (Scan ExistingRDD, NEVER a corpus
-    FileScan) into a partially-aggregated groupBy — map-side combine
-    shrinks the pair stream before the single hash exchange."""
-    pairs = vocab.select(
-        F.explode(
-            F.expr(
-                "zip_with(split(syms, ' '),"
-                " slice(split(syms, ' '), 2, size(split(syms, ' '))),"
-                " (a, b) -> struct(a AS l, b AS r))"
-            )
-        ).alias("p"),
-        "freq",
-    ).filter(F.col("p.r").isNotNull())
-    return pairs.groupBy("p.l", "p.r").agg(F.sum("freq").alias("cnt"))
+def pair_counts(vocab: list[list]) -> dict[tuple[str, str], int]:
+    """Adjacent symbol pairs of :func:`merge_vocab` weighted by word
+    frequency."""
+    counts: dict[tuple[str, str], int] = {}
+    for syms, freq in vocab:
+        s = syms.split(" ")
+        for p in zip(s, s[1:]):
+            counts[p] = counts.get(p, 0) + freq
+    return counts
 
 
-def apply_bpe_merge(vocab: DataFrame, left: str, right: str) -> DataFrame:
-    """One merge round's symbol-string rewrite, entirely in the JVM:
-    leftmost non-overlapping replacement of the token-bounded
-    ``"left right"`` bigram with ``leftright`` — the exact
-    ``re.sub(r"(?<!\\S)l r(?!\\S)", ...)`` the pre-r11 Arrow
-    ``mapInPandas`` round computed, as one codegen
-    ``regexp_replace`` (guide §4.1: built-ins over Python; measured
-    round 11, the per-round Python worker round trip was the
-    dominant cost of every training round at sf0.1).
-
-    Portability of the rewrite is unchanged: ``re.escape`` emits
-    backslash escapes only for ASCII punctuation, which Java regex
-    reads identically; symbols never contain whitespace (the vocab
-    splits on it), so the ``\\S`` lookarounds see the same
-    boundaries; and both engines substitute leftmost
-    non-overlapping on the ORIGINAL string."""
-    import re as _re
-
-    pat = (
-        r"(?<!\S)" + _re.escape(left) + " " + _re.escape(right) + r"(?!\S)"
+def apply_merge(vocab: list[list], left: str, right: str) -> None:
+    """One merge round's symbol-string rewrite, in place: leftmost
+    non-overlapping replacement of the token-bounded ``"left right"``
+    bigram with ``leftright`` — byte-identical to Spark's
+    ``regexp_replace(syms, "(?<!\\S)l r(?!\\S)", "lr")`` (Java's
+    ASCII ``\\S``), which the oracles' doubled-space rewrite
+    reproduces."""
+    pat = re.compile(
+        f"(?<!{_JAVA_NON_SPACE}){re.escape(left)} "
+        f"{re.escape(right)}(?!{_JAVA_NON_SPACE})"
     )
-    # Java Matcher replacement text treats \ and $ specially
-    rep = (left + right).replace("\\", "\\\\").replace("$", "\\$")
-    return vocab.select(
-        F.regexp_replace("syms", pat, rep).alias("syms"), "freq"
-    )
+    needle = f"{left} {right}"
+    rep = (left + right).replace("\\", "\\\\")
+    for entry in vocab:
+        if needle in entry[0]:
+            entry[0] = pat.sub(rep, entry[0])
 
 
 def bpe_train(
@@ -971,46 +965,38 @@ def bpe_train(
     ``n_merges`` symbol merges over the corpus vocabulary.
 
     Classic word-level BPE: the vocabulary is (word, frequency) —
-    ONE aggregation over the corpus, after which every round works
-    on the vocab frame (|unique words|, thousands of rows, NOT
-    corpus-sized). Each round: (1) count adjacent symbol pairs
-    weighted by word frequency — exploded zip_with pairs into a
-    partial-aggregated groupBy, all JVM; (2) take the argmax pair
-    (1-row driver fetch, the BPE sequential dependency); (3) apply
-    the merge to the symbol sequences — one codegen
-    ``regexp_replace`` (:func:`apply_bpe_merge`), so a training
-    round never crosses the Python boundary at all (r11: the
-    per-round Arrow ``mapInPandas`` worker round trip was the
-    dominant per-round cost).
+    ONE aggregation over the corpus and ONE collect
+    (:func:`merge_vocab`), whatever ``n_merges`` is. Each round then
+    runs on the driver: (1) count adjacent symbol pairs weighted by
+    word frequency; (2) take the argmax pair; (3) rewrite the symbol
+    sequences (:func:`apply_merge`). The rounds are sequential and
+    the vocab is |unique words| rows, so a distributed round would
+    be about three Spark jobs (pair aggregate, 1-row argmax collect,
+    vocab checkpoint) of fixed driver latency doing almost no work.
+    The driver holds |unique words| entries, the same bound
+    single-machine BPE trainers live with.
 
     Returns the merge table (rank, left, right, pair_count) —
     deterministic given the corpus: ties on count break
-    lexicographically. At 100 TB only step (1)'s FIRST vocab
-    aggregation touches the corpus; training itself runs on the
-    vocab frame, which is why single-machine BPE trainers survive —
-    this version just keeps the vocab distributed too."""
-    spark = df.sparkSession
-    vocab = bpe_vocab(df, text_col)
-
+    lexicographically. ``n_merges=0`` returns no rows."""
+    vocab = merge_vocab(df, text_col)
     merges = []
     for rank in range(n_merges):
-        top = (
-            bpe_pair_counts(vocab)
-            .orderBy(F.col("cnt").desc(), F.col("l"), F.col("r"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
+        counts = pair_counts(vocab)
+        if not counts:
             break
-        left, right, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
-        merges.append((rank, left, right, int(cnt)))
-
-        vocab = apply_bpe_merge(vocab, left, right).localCheckpoint()
+        (left, right), cnt = min(
+            counts.items(), key=lambda kv: (-kv[1], kv[0])
+        )
+        merges.append((rank, left, right, cnt))
+        apply_merge(vocab, left, right)
 
     from pac_data_pipeline_spark.session import local_table
 
     return local_table(
-        spark, merges, "rank int, left string, right string, pair_count long"
+        df.sparkSession,
+        merges,
+        "rank int, left string, right string, pair_count long",
     )
 
 

@@ -92,6 +92,10 @@ def textrank_keywords(
     """Top-``top_k`` keywords by integer fixed-point weighted
     PageRank over the co-occurrence graph; ties break on the token.
     Output: (token, score) with score in pico-units."""
+    if n_iter < 1:
+        # n_iter=0 would leave the rank frame unbound; fail before
+        # any plan is built, as hits() does
+        raise ValueError("n_iter must be >= 1")
     # Iteration frames stay SPARSE (r12, the pagerank lesson —
     # exact here, not merely float-safe, because the chain is
     # integer fixed-point): a token absent from a round's push

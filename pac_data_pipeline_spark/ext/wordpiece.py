@@ -8,15 +8,15 @@ share the same lifecycle contract and differential-test discipline.
 Semantics
 ---------
 * **Train** — identical loop shape to BPE (ONE corpus vocab
-  aggregation, per-round pair counts on the vocab frame, argmax,
-  Arrow merge rewrite), but the argmax maximizes the WordPiece
+  collect, then per-round pair counts, argmax and merge rewrite on
+  the driver), but the argmax maximizes the WordPiece
   likelihood ratio ``cnt(l,r) / (cnt(l) · cnt(r))`` instead of raw
   pair frequency — merging the pair whose joint occurrence most
   exceeds what its parts' unigram frequencies predict.
 * **Float discipline** — the ratio is never materialized as a
   float: the sort key is the EXACT integer quotient
-  ``cnt(l,r) · 10^18 div (cnt(l) · cnt(r))`` in 128-bit integer
-  arithmetic (Spark DECIMAL(38,0), DuckDB HUGEINT). Because
+  ``cnt(l,r) · 10^18 div (cnt(l) · cnt(r))`` (Python integers on
+  the driver, DuckDB HUGEINT in the oracle). Because
   ``cnt(l,r) ≤ min(cnt(l), cnt(r))``, the quotient is bounded by
   ``10^18 / max(cnt(l), cnt(r)) ≤ 10^18`` — always inside BIGINT —
   and the numerator by ``10^18 · cnt ≤ 10^24``, inside 128-bit.
@@ -28,11 +28,11 @@ Semantics
   trained encoding never hits an unknown; real WordPiece's [UNK]
   arises only cross-corpus and is out of contract here).
 
-Scale shape: the corpus is touched once (vocab aggregation); every
-round runs on the vocab frame; the merge table is an ``n_merges``-row
-bounded collect; encode is a scan-stage Arrow map with a capped
-per-partition word memo — the bpe_encode shape, zero corpus
-shuffles.
+Scale shape: the corpus is touched once (vocab aggregation and
+collect); every round runs on the driver's vocab list; the merge
+table is an ``n_merges``-row bounded collect; encode is a
+scan-stage Arrow map with a capped per-partition word memo — the
+bpe_encode shape, zero corpus shuffles.
 
 Reference parity: the reference repo has no tokenizer; extension
 surface per SURVEY §2.10 (train-once/apply-everywhere lifecycle as
@@ -44,12 +44,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from pac_data_pipeline_spark.ext.text import (
-    apply_bpe_merge,
-    bpe_pair_counts,
-    bpe_vocab,
+    apply_merge,
+    merge_vocab,
+    pair_counts,
     py_tokens,
 )
 
@@ -68,18 +68,6 @@ _MEMO_CAP = 1_000_000
 _N_STEPS = 18
 
 
-def _unit_counts(vocab: DataFrame) -> DataFrame:
-    """Per-symbol occurrence counts over the (syms, freq) vocab
-    frame — the unigram denominators of the likelihood ratio."""
-    return (
-        vocab.select(
-            F.explode(F.split("syms", " ")).alias("u"), "freq"
-        )
-        .groupBy("u")
-        .agg(F.sum("freq").alias("ucnt"))
-    )
-
-
 def wordpiece_train(
     df: DataFrame,
     n_merges: int = 8,
@@ -88,55 +76,37 @@ def wordpiece_train(
     """Learn ``n_merges`` WordPiece merges. Returns (rank, left,
     right, pair_count, score_q) — score_q the exact quantized
     likelihood quotient the argmax ran on. Deterministic given the
-    corpus. Per round: pair + unit counts on the vocab frame (two
-    tiny shuffles), a 1-row argmax collect, one all-JVM
-    ``regexp_replace`` merge rewrite — the
+    corpus. One Spark action (the vocab collect of
+    :func:`ext.text.merge_vocab`); every round — pair and unit
+    counts, the argmax, the merge rewrite — runs on the driver, the
     :func:`ext.text.bpe_train` loop with a different argmax."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    spark = df.sparkSession
-    vocab = bpe_vocab(df, text_col)
+    vocab = merge_vocab(df, text_col)
 
     merges = []
     for rank in range(n_merges):
-        pairs = bpe_pair_counts(vocab)
-        units = _unit_counts(vocab)
-        ul = units.select(
-            F.col("u").alias("l"), F.col("ucnt").alias("lcnt")
-        )
-        ur = units.select(
-            F.col("u").alias("r"), F.col("ucnt").alias("rcnt")
-        )
-        top = (
-            pairs.join(ul, "l")
-            .join(ur, "r")
-            .select(
-                "l",
-                "r",
-                "cnt",
-                F.expr(
-                    f"(CAST(cnt AS DECIMAL(38,0)) * {_SCALE}) div "
-                    "(CAST(lcnt AS DECIMAL(38,0)) * rcnt)"
-                ).alias("score_q"),
-            )
-            .orderBy(F.col("score_q").desc(), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not top:
+        pairs = pair_counts(vocab)
+        if not pairs:
             break
-        left, right = top[0]["l"], top[0]["r"]
-        merges.append(
-            (rank, left, right, int(top[0]["cnt"]), int(top[0]["score_q"]))
+        units: dict[str, int] = {}
+        for syms, freq in vocab:
+            for u in syms.split(" "):
+                units[u] = units.get(u, 0) + freq
+        (left, right), cnt, score_q = min(
+            (
+                (lr, cnt, cnt * _SCALE // (units[lr[0]] * units[lr[1]]))
+                for lr, cnt in pairs.items()
+            ),
+            key=lambda t: (-t[2], t[0]),
         )
-
-        # the bpe_train rewrite, all-JVM (ext.text.apply_bpe_merge)
-        vocab = apply_bpe_merge(vocab, left, right).localCheckpoint()
+        merges.append((rank, left, right, cnt, score_q))
+        apply_merge(vocab, left, right)
 
     from pac_data_pipeline_spark.session import local_table
 
     return local_table(
-        spark,
+        df.sparkSession,
         merges,
         "rank int, left string, right string, pair_count long, "
         "score_q long",

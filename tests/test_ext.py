@@ -1009,6 +1009,44 @@ def test_bpe_train_matches_reference(spark):
     assert got == naive_bpe(corpus, 5)
 
 
+def test_apply_merge_matches_jvm_regexp_replace(spark):
+    """The driver-side merge rewrite equals the JVM
+    ``regexp_replace`` it replaced, including on symbols that hold
+    characters Java's ``\\s`` and Python's disagree on (VT is Java
+    whitespace; NBSP, U+0085, U+2028 and U+001C are whitespace only
+    to Python), back-to-back and self-overlapping pairs, and
+    replacement text with ``$`` and backslashes."""
+    import re
+
+    from pac_data_pipeline_spark.ext.text import apply_merge
+
+    cases = [
+        ("a b a b", "a", "b"),
+        ("a a a", "a", "a"),
+        ("\xa0a b", "a", "b"),
+        ("\x0ba b", "a", "b"),
+        ("a b\x85 a b", "a", "b"),
+        ("a b\x0b a b", "a", "b"),
+        ("\u2028a b \x1cb a b", "a", "b"),
+        ("$ \\ $ \\", "$", "\\"),
+        ("x \U0001f600 a", "\U0001f600", "a"),
+    ]
+    rows = []
+    for syms, left, right in cases:
+        pat = (
+            r"(?<!\S)" + re.escape(left) + " " + re.escape(right) + r"(?!\S)"
+        )
+        rep = (left + right).replace("\\", "\\\\").replace("$", "\\$")
+        rows.append((syms, pat, rep))
+    df = spark.createDataFrame(rows, "syms string, pat string, rep string")
+    jvm = [r[0] for r in df.selectExpr("regexp_replace(syms, pat, rep)").collect()]
+    vocab = [[syms, 1] for syms, _, _ in cases]
+    for entry, (_, left, right) in zip(vocab, cases):
+        apply_merge([entry], left, right)
+    assert [e[0] for e in vocab] == jvm
+    assert jvm[2] == "\xa0a b" and jvm[3] == "\x0bab"
+
+
 def test_bpe_train_empty_and_single_char_corpus(spark):
     from pac_data_pipeline_spark.ext.text import bpe_train
 
@@ -2371,6 +2409,77 @@ def test_mmr_select_matches_greedy_reference(spark):
     assert sorted(r.sel_rank for r in picks) == [1, 2, 3]
 
 
+def test_mmr_select_null_vector_element(spark):
+    """A NULL vector element is a NULL literal in the next rounds'
+    distance expressions, not a TypeError while the plan is built.
+    SQL NULL semantics then decide the picks: the NULL-element
+    vector's distances are NULL, NULL rel_d sorts first, the
+    ``least`` fold skips NULL distances, and a round whose every
+    score is NULL falls back to the smaller id."""
+    import math
+
+    import numpy as np
+
+    from pac_data_pipeline_spark.ext.mmr import mmr_select
+
+    rows = [
+        (1, [0.1, 0.2, 0.3]),
+        (2, [0.1, None, 0.3]),
+        (3, [0.5, 0.1, -0.2]),
+        (4, [-0.3, 0.0, 0.1]),
+        (5, [0.2, 0.2, 0.2]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = [
+        (r.sel_rank, r.vid, r.rel_d, r.div_d)
+        for r in mmr_select(df, k=4).orderBy("sel_rank").collect()
+    ]
+
+    q = {
+        i: [
+            None if x is None
+            else int(math.floor(float(np.float32(x)) * 1000 + 0.5))
+            for x in v
+        ]
+        for i, v in rows
+    }
+    n = len(q)
+    cent = [
+        int(math.floor(
+            (2 * sum(q[i][p] for i in q if q[i][p] is not None) + n)
+            / (2 * n)
+        ))
+        for p in range(3)
+    ]
+
+    def d(a, b):
+        if None in a or None in b:
+            return None
+        return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+    def nulls_first(v):
+        return (v is not None, v or 0)
+
+    rel = {i: d(q[i], cent) for i in q}
+    sel = [min(q, key=lambda i: (nulls_first(rel[i]), i))]
+    want = [(1, sel[0], rel[sel[0]], None)]
+    for t in range(2, 5):
+        rest = [i for i in q if i not in sel]
+        div = {}
+        for i in rest:
+            ds = [x for x in (d(q[i], q[j]) for j in sel) if x is not None]
+            div[i] = min(ds) if ds else None
+        score = {
+            i: None if div[i] is None or rel[i] is None else div[i] - rel[i]
+            for i in rest
+        }
+        best = max(rest, key=lambda i: (nulls_first(score[i]), -i))
+        sel.append(best)
+        want.append((t, best, rel[best], div[best]))
+    assert got == want
+    assert got[0][1] == 2 and got[0][2] is None
+
+
 def test_temperature_mixture_hamilton_exact(spark):
     """Mixture contract: allocations sum to EXACTLY the budget
     (Hamilton's method — float-share rounding can be off by
@@ -3112,6 +3221,70 @@ def test_hits_hand_computed(spark):
     none = spark.createDataFrame([], "src long, dst long")
     zeros = {r.doc_id: (r.hub, r.auth) for r in hits(nodes, none).collect()}
     assert all(v == (0.0, 0.0) for v in zeros.values())
+
+
+def test_hits_ignores_edges_leaving_the_node_set(spark):
+    """Edges with an endpoint outside ``nodes`` feed neither score
+    past iteration 1: authorities sum hubs over edges FROM nodes,
+    hubs sum authorities over edges INTO nodes, in every iteration
+    (the dense form, as hits_fixture_sql computes it). Node 9 is
+    not a node: 0->9 must not raise hub(0), and 9->1 must not raise
+    auth(1); both still count in the L1 totals the fixture uses."""
+    from pac_data_pipeline_spark.ext.graph import hits
+
+    nodes = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
+    links = [(0, 1), (1, 2), (2, 0), (2, 3), (0, 9), (9, 1)]
+    edges = spark.createDataFrame(links, "src long, dst long")
+    got = {
+        r.doc_id: (r.hub, r.auth)
+        for r in hits(nodes, edges, n_iter=3).collect()
+    }
+
+    ids = range(4)
+    hub = {v: round(1 / 4, 12) for v in ids}
+    for _ in range(3):
+        ra: dict = {}
+        for s_, d in links:
+            if s_ in hub:
+                ra[d] = ra.get(d, 0.0) + hub[s_]
+        ra = {d: round(x, 12) for d, x in ra.items()}
+        ta = round(sum(ra.values()), 12)
+        auth = {v: round(ra.get(v, 0.0) / ta, 12) for v in ids}
+        rh: dict = {}
+        for s_, d in links:
+            if d in auth:
+                rh[s_] = rh.get(s_, 0.0) + auth[d]
+        rh = {s_: round(x, 12) for s_, x in rh.items()}
+        th = round(sum(rh.values()), 12)
+        hub = {v: round(rh.get(v, 0.0) / th, 12) for v in ids}
+    want = {v: (round(hub[v], 8), round(auth[v], 8)) for v in ids}
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "fn", ["hits", "pagerank", "personalized_pagerank", "textrank_keywords"]
+)
+def test_iterative_graph_ops_reject_zero_iterations(spark, fn):
+    """n_iter=0 is a ValueError naming the parameter, raised before
+    any plan is built — not an AttributeError on an unbound rank
+    frame."""
+    from pac_data_pipeline_spark.ext import graph, textrank
+
+    nodes = spark.createDataFrame([(0,), (1,)], "doc_id long")
+    edges = spark.createDataFrame([(0, 1), (1, 0)], "src long, dst long")
+    docs = spark.createDataFrame([(0, "a b c a")], "doc_id long, text string")
+    call = {
+        "hits": lambda: graph.hits(nodes, edges, n_iter=0),
+        "pagerank": lambda: graph.pagerank(nodes, edges, n_iter=0),
+        "personalized_pagerank": lambda: graph.personalized_pagerank(
+            nodes, edges, n_iter=0
+        ),
+        "textrank_keywords": lambda: textrank.textrank_keywords(
+            docs, n_iter=0
+        ),
+    }[fn]
+    with pytest.raises(ValueError, match="n_iter"):
+        call()
 
 
 def test_hits_rejects_zero_iterations(spark):

@@ -10,6 +10,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from pac_data_pipeline_spark.ext.text import bpe_train
+from pac_data_pipeline_spark.ext.wordpiece import wordpiece_train
 from pac_data_pipeline_spark.plans.analytics import (
     local_supplier_volume,
     revenue_forecast,
@@ -81,33 +83,33 @@ def test_partial_aggregation_before_shuffle(spark):
     assert "hashpartitioning(l_returnflag" in p, p
 
 
-def test_bpe_merge_round_never_shuffles_corpus(spark):
-    """x_bpe_train executes eagerly (the merge loop collects 1 row
-    per round), so PLANS_AUTO.md records only the final ExistingRDD —
-    this pins the PER-ROUND plan the loop repeats n_merges times
-    instead: the pair-count aggregate must read the checkpointed
-    vocab (Scan ExistingRDD), never re-scan the corpus (0 FileScans),
-    partial-aggregate map-side before exactly ONE hash exchange, and
-    the top-1 fetch must compile to TakeOrderedAndProject (a
-    per-partition heap), never a global Sort."""
-    import re
+def _sql_executions(spark) -> set[int]:
+    """Ids of every SQL execution the session's status store holds
+    (each action is one execution; AQE's per-stage jobs share their
+    action's id)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next().executionId())
+    return ids
 
-    from pac_data_pipeline_spark.ext.text import bpe_pair_counts, bpe_vocab
 
+@pytest.mark.parametrize(
+    "train", [bpe_train, wordpiece_train], ids=lambda f: f.__name__
+)
+def test_merge_training_is_one_round_trip(spark, train):
+    """BPE and WordPiece training collect the corpus vocabulary once
+    and run every merge round on the driver: exactly ONE SQL
+    execution whatever ``n_merges`` is — a per-round pair aggregate,
+    argmax collect or vocab checkpoint would add executions that
+    grow with the round count."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    vocab = bpe_vocab(docs)
-    top = (
-        bpe_pair_counts(vocab)
-        .orderBy(F.col("cnt").desc(), F.col("l"), F.col("r"))
-        .limit(1)
-    )
-    p = plan(top, mode="simple")
-    assert "FileScan" not in p, p
-    assert "Scan ExistingRDD" in p, p
-    assert p.count("HashAggregate") >= 2, p  # partial + final
-    assert len(re.findall(r"Exchange hashpartitioning", p)) == 1, p
-    assert "TakeOrderedAndProject" in p, p
-    assert "Sort " not in p, p
+    for n_merges in (1, 8):
+        before = _sql_executions(spark)
+        merges = train(docs, n_merges=n_merges)
+        assert len(_sql_executions(spark) - before) == 1, n_merges
+        assert merges.count() == n_merges
 
 
 def test_topk_uses_take_ordered(spark):

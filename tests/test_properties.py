@@ -1135,7 +1135,8 @@ def test_bpe_doubled_space_rewrite_matches_python_resub(toks, pair):
     single-space replace consumes the shared boundary space and
     breaks exactly these cases — this replays the SQL string
     pipeline in pure Python so hypothesis can sweep the corner
-    cases the corpus never hits."""
+    cases the corpus never hits. The trainers' apply_merge must
+    agree with both."""
     import re
 
     l, r = pair
@@ -1152,6 +1153,13 @@ def test_bpe_doubled_space_rewrite_matches_python_resub(toks, pair):
     d = d.replace(f" {l}  {r} ", f" {l}{r} ")
     got = d.replace("  ", " ").strip(" ")
     assert got == want, (syms, pair, got, want)
+
+    # and the trainers' own driver-side rewrite
+    from pac_data_pipeline_spark.ext.text import apply_merge
+
+    vocab = [[syms, 1]]
+    apply_merge(vocab, l, r)
+    assert vocab[0][0] == want, (syms, pair, vocab[0][0], want)
 
 
 @settings(max_examples=300, deadline=None)
